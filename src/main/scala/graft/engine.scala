@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,13 +25,16 @@ import org.apache.spark.sql.types._
   *    they need the whole partition.
   *  - Spark's WindowExec sorts within partitions via UnsafeExternalSorter and
   *    spills; frames are evaluated incrementally (no per-row re-scan).
-  *  - DISCRETE_PERCENTILE is a TypedImperativeAggregate over the shared spec
-  *    ([[graft.functions.DiscretePercentileAgg]]) with the reference UDAF's
-  *    exact semantics (running RANGE frame per the order clause, null inputs
-  *    skipped). Its buffer is O(distinct values) per partition — same
-  *    complexity envelope as the reference (DiscretePercentile.java:98-168);
-  *    for high-cardinality value columns prefer CONTINUOUS_PERCENTILE, whose
-  *    exact-percentile buffer Spark spills.
+  *  - MEDIAN, CONTINUOUS_PERCENTILE and DISCRETE_PERCENTILE are one
+  *    insert-only order-statistic aggregate over the shared spec
+  *    ([[graft.functions.PercentileAgg]]): Spark's percentile values for the
+  *    first two, the reference UDAF's for the third (DiscretePercentile.java,
+  *    running RANGE frame per the order clause, null inputs skipped). The
+  *    validator admits no frame clause for them, so WindowExec only grows
+  *    their frames — O(log d) per row and an O(d) buffer for d distinct
+  *    values per partition, where Spark's `percentile` re-sorts the frame
+  *    for every row. The Spark SQL dialect ([[SqlEmitter]]) still emits the
+  *    built-in `percentile`, which stays quadratic on running frames.
   */
 object WindowEngine {
 
@@ -145,27 +148,27 @@ object WindowEngine {
     case WindowFn.PercentRank => percent_rank()
     case WindowFn.NTile       => ntile(agg.args.head.toInt)
     case WindowFn.RowNumber   => row_number()
-    // Exact percentile (Hive-style interpolation), NOT approx_percentile —
-    // reference uses callUDF("percentile", ...) (WindowsAggregationUtil.java:140-147).
-    case WindowFn.Median                => percentile(col(agg.field), lit(0.5))
-    case WindowFn.ContinuousPercentile  => percentile(col(agg.field), lit(agg.args.head.toDouble))
+    // Exact percentile with Hive-style interpolation, NOT approx_percentile —
+    // the values of the reference's callUDF("percentile", ...)
+    // (WindowsAggregationUtil.java:140-147), from the order-statistic buffer.
+    case WindowFn.Median                => percentileColumn(agg, 0.5, discrete = false)
+    case WindowFn.ContinuousPercentile  => percentileColumn(agg, agg.args.head.toDouble, discrete = false)
     case WindowFn.Lead        => lead(agg.field, agg.args.head.toInt)
     case WindowFn.Lag         => lag(agg.field, agg.args.head.toInt)
     case WindowFn.First       => first(agg.field, firstLastIgnoreNulls(agg))
     case WindowFn.Last        => last(agg.field, firstLastIgnoreNulls(agg))
     case WindowFn.CumulativeDistribution => cume_dist()
     case WindowFn.Accumulate  => sum(agg.field)
-    // Typed imperative aggregate reproducing the reference UDAF
-    // (DiscretePercentile.java) — over the SAME shared spec, so with an order
-    // clause it evaluates per row on the default running RANGE frame, exactly
-    // like the reference's .over(spec) application
+    // The reference UDAF (DiscretePercentile.java) over the SAME shared
+    // spec: with an order clause it evaluates per row on the default running
+    // RANGE frame, like the reference's .over(spec) application
     // (WindowsAggregationUtil.java:119-124).
-    case WindowFn.DiscretePercentile =>
-      org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.DiscretePercentileAgg(
-          org.apache.spark.sql.GraftColumnBridge.expression(col(agg.field)),
-          agg.args.head.toDouble).toAggregateExpression())
+    case WindowFn.DiscretePercentile => percentileColumn(agg, agg.args.head.toDouble, discrete = true)
   }
+
+  private def percentileColumn(agg: AggregateSpec, p: Double, discrete: Boolean): Column =
+    GraftColumnBridge.column(graft.functions.PercentileAgg(
+      GraftColumnBridge.expression(col(agg.field)), p, discrete).toAggregateExpression())
 
   /** Post-.over() cast honoring the reference's declared output types:
     * PERCENT_RANK is declared FLOAT (WindowAggregationConfig.java:333) though

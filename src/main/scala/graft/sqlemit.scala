@@ -165,6 +165,9 @@ object SqlEmitter {
       case WindowFn.PercentRank => "PERCENT_RANK()" // FLOAT cast applied around the OVER
       case WindowFn.NTile       => s"NTILE($arg0)"
       case WindowFn.RowNumber   => "ROW_NUMBER()"
+      // Spark's built-in percentile re-sorts a running frame for every row,
+      // so the emitted MEDIAN stays quadratic per partition where the
+      // engine's PercentileAgg is O(log d) per row.
       case WindowFn.Median => dialect match {
         case BigQuery => s"PERCENTILE_CONT($col, 0.5)"
         case Spark    => s"percentile($col, 0.5)"
@@ -178,10 +181,10 @@ object SqlEmitter {
       case WindowFn.DiscretePercentile => dialect match {
         case BigQuery => s"PERCENTILE_DISC($col, $arg0)"
         // DuckDB's quantile_disc picks the same cume_dist>=p element as the
-        // engine's DiscretePercentileAgg, including over running frames
+        // engine's PercentileAgg, including over running frames
         case DuckDb => s"quantile_disc($col, $arg0)"
         // whole-partition only (see partitionOnly above); the engine's
-        // running-frame form still needs the native DiscretePercentileAgg
+        // running-frame form still needs the native PercentileAgg
         case Spark => s"PERCENTILE_DISC($arg0) WITHIN GROUP (ORDER BY $col)"
       }
       case WindowFn.Lead => s"LEAD($col, $arg0)"

@@ -113,8 +113,9 @@ class EngineSpec extends AnyFunSuite {
       spark.sparkContext.parallelize((1 to 1000).map(i => Row(s"g${i % 3}", (i % 50).toDouble)), 8),
       StructType(Seq(StructField("g", StringType), StructField("x", DoubleType))))
     val agg = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.DiscretePercentileAgg(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("x")), 0.5).toAggregateExpression())
+      graft.functions.PercentileAgg(
+        org.apache.spark.sql.GraftColumnBridge.expression(col("x")), 0.5, discrete = true)
+        .toAggregateExpression())
     val got = many.groupBy("g").agg(agg.as("dp")).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     // per group: values are (i%50) for i ≡ group (mod 3) — compute expected directly

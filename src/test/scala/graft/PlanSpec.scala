@@ -27,6 +27,17 @@ class PlanSpec extends AnyFunSuite {
     assert("(?m)Window \\[".r.findAllIn(p).size == 1)
   }
 
+  test("holistic windows (q06-q08) run the order-statistic aggregate, not the built-in percentile") {
+    for ((q, fn) <- Seq("q06_median" -> "graft_percentile_cont(",
+        "q07_continuous_percentile" -> "graft_percentile_cont(",
+        "q08_discrete_percentile" -> "graft_percentile_disc(")) {
+      val p = plan(q)
+      assert(p.linesIterator.exists(l => l.contains("Window [") && l.contains(fn)), s"$q: Window over $fn")
+      // the built-in re-sorts the frame per row; graft_percentile_* do not match
+      assert("(?<![\\w])percentile\\(".r.findFirstIn(p).isEmpty, s"$q: built-in percentile in plan")
+    }
+  }
+
   test("filter pushes down to the parquet scan") {
     val p = plan("q18_groupby_agg")
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), LessThan(l_quantity,45.0)]"), p.linesIterator.filter(_.contains("Pushed")).mkString)
